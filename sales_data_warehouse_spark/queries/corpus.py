@@ -6197,7 +6197,7 @@ def streaming_dedup_batch_contract(spark: SparkSession, sf: str) -> DataFrame:
     ``streaming.documents.dedup_documents_batch`` (the exact function
     the ``foreachBatch`` sink calls — per-batch admitted parquet under
     ``admitted/batch_id=N``, append-only fingerprint state partitions
-    advanced by the ``_last_batch`` high-water mark), then the
+    advanced by the ``sources.commit`` high-water mark), then the
     admitted directory is read back. Exact oracle: each distinct text
     is admitted exactly once, in the first batch that carries it, by
     its min-id doc — and the batch_id partition column must equal that

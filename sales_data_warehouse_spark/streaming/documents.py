@@ -7,40 +7,33 @@ ingestion front door of a growing pre-training corpus: per batch the
 work is O(batch) fingerprinting plus one join against the fingerprint
 table; admitted history is never re-read or re-hashed.
 
-Replay safety follows the module conventions (see
-``streaming/dimensions.py``): admitted docs land in a ``batch_id=N``
-directory with per-batch overwrite; the fingerprint state is
-APPEND-ONLY (late r14) — each fold writes only its batch's fresh
-fingerprints as their own ``fingerprints/fp/batch_id=N`` partition,
-AFTER the admitted write, then advances the ``_last_batch`` high-water
-mark. Prior state is always read partition-pruned to ``<= mark``, so
-an uncommitted or ahead-of-mark partition is invisible; a replayed
-batch either recomputes identically (crash before the mark advanced)
-or is skipped by an O(1) mark comparison (crash after — the one case
-where recomputing would wrongly admit nothing and overwrite the
-batch's output with an empty directory). The full crash-window
-walkthrough lives on ``dedup_documents_batch``. The previous designs
+Replay safety: admitted docs land in a ``batch_id=N`` directory with
+per-batch overwrite; each fold then writes only its batch's fresh
+fingerprints as the ``fingerprints/fp/batch_id=N`` partition and
+advances the state's batch mark (``sources.commit``). Prior state is
+always read partition-pruned to ``<= mark``; the crash-window
+walkthrough lives on ``dedup_documents_batch``. Earlier layouts
 migrate on first contact: the r14 staged-swap layout by pure rename,
 the pre-r14 flat layout via a one-time state-sized containment check.
 
 Why append-only: the staged-swap design rewrote the ENTIRE fingerprint
 union every fold — O(state) writes per micro-batch, which at 100 TB
 (|distinct texts| rows) dwarfs the O(batch) work the fold actually
-does. The swap bought atomicity for the mark; partition pruning plus
-the per-partition ``_SUCCESS`` job-commit markers buy the same
-guarantees at delta cost. ``compact_dedup_state`` bounds the partition
-count when triggers accumulate; correctness never depends on it.
+does. Partition pruning plus the per-partition ``_SUCCESS`` job-commit
+markers give the same guarantees at delta cost. ``compact_dedup_state``
+bounds the partition count when triggers accumulate; correctness never
+depends on it.
 
-One inherited caveat (``staged_overwrite``, see its docstring): a
-pre-append state that crashed INSIDE its two-rename swap window sits
-at ``<path>.stage_old`` with the live path absent. Treating that as
-"no state yet" would rebuild from nothing — every fold still calls
-``compaction.recover_staged`` before reading (the r11 lesson from the
-weighted-reservoir fold), then finishes any half-done compaction or
-layout migration the same way.
+Every fold and read first restores a state left mid-swap by the old
+staged-swap design (``compaction.recover_staged``: the live path
+absent, ``<path>.stage_old`` holding the only copy — read as "no state
+yet" it would rebuild from nothing), then finishes any half-done
+compaction or layout migration.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,15 +42,22 @@ from pyspark.sql import types as T
 from sales_data_warehouse_spark.operators.dedup import (
     incremental_exact_dedup,
 )
+from sales_data_warehouse_spark.sources.commit import (
+    MARK,
+    batch_done,
+    committed_batches,
+    merge_partitions,
+    must_rename,
+    read_mark,
+    recover_merge,
+    write_mark,
+)
 from sales_data_warehouse_spark.sources.compaction import (
     enforce_output_lineage,
     fs_delete,
     fs_exists,
     fs_ls,
     fs_mkdirs,
-    fs_read_text,
-    fs_rename,
-    fs_write_text,
     recover_staged,
 )
 
@@ -93,101 +93,47 @@ def read_documents_stream(
     )
 
 
-def _must_rename(spark: SparkSession, src: str, dst: str) -> None:
-    """Rename or die loudly: every state-layout rename below moves the
-    ONLY copy of some rows, so a silent False from the Hadoop rename
-    (dst exists, src vanished, permission) must never read as success
-    — the next reader would see a state with those rows invisible."""
-    if not fs_rename(spark, src, dst):
-        raise IOError(
-            f"state rename failed: {src} -> {dst} (does the "
-            "destination already exist?). The state layout is "
-            "mid-transition; resolve the paths before restarting."
-        )
+def _open_fp_state(spark: SparkSession, state_path: str) -> None:
+    """Finish what a crash left half done before the fingerprint state
+    is read: a mid-swap v2 fold, a mid-commit compaction, a
+    half-migrated v2 layout (whose flat table goes under its mark)."""
+    recover_staged(spark, state_path)
+    recover_merge(spark, f"{state_path}/fp", f"{state_path}/fp_compact_tmp_")
+    _migrate_flat(
+        spark, f"{state_path}/fp", f"{state_path}/fp.v2mig",
+        lambda: read_mark(spark, state_path),
+    )
 
 
-def _committed_batches(spark: SparkSession, fp_dir: str) -> list[int]:
-    """batch ids of fully-written state partitions — those whose
-    directory carries the ``_SUCCESS`` job-commit marker. A partition
-    WITHOUT it is a crashed in-flight write and must not count."""
-    out = []
-    for name in fs_ls(spark, fp_dir):
-        if not name.startswith("batch_id="):
-            continue
-        try:
-            b = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if fs_exists(spark, f"{fp_dir}/{name}/_SUCCESS"):
-            out.append(b)
-    return sorted(out)
-
-
-def _state_mark(spark: SparkSession, state_path: str) -> int | None:
-    """The state's high-water mark: every batch with id <= mark is
-    fully folded. The ``_last_batch`` file is the O(1) fast path; a
-    missing or torn file (its write is a plain overwrite, NOT atomic)
-    falls back to the authoritative scan of partition ``_SUCCESS``
-    markers — each partition's job commit IS atomic, so the max
-    committed partition id is exactly the mark the torn file would
-    have recorded."""
-    mark = fs_read_text(spark, f"{state_path}/_last_batch")
-    if mark is not None:
-        try:
-            return int(mark)
-        except ValueError:
-            pass
-    done = _committed_batches(spark, f"{state_path}/fp")
-    return done[-1] if done else None
-
-
-def _recover_fp_compaction(spark: SparkSession, state_path: str) -> None:
-    """Finish a :func:`compact_dedup_state` that crashed mid-commit:
-    the staged combined table (``fp_compact_tmp_<M>``, full state
-    <= M) survives until the commit completes, so recovery deletes any
-    remaining source partitions <= M and renames the staged table into
-    ``fp/batch_id=<M>``. Idempotent; called before every state read."""
-    for name in fs_ls(spark, state_path):
-        if not name.startswith("fp_compact_tmp_"):
-            continue
-        m = int(name.rsplit("_", 1)[1])
-        fp_dir = f"{state_path}/fp"
-        for b in _committed_batches(spark, fp_dir):
-            if b <= m:
-                fs_delete(spark, f"{fp_dir}/batch_id={b}")
-        fs_mkdirs(spark, fp_dir)
-        _must_rename(
-            spark, f"{state_path}/{name}", f"{fp_dir}/batch_id={m}"
-        )
-
-
-def _migrate_v2_state(spark: SparkSession, state_path: str) -> None:
-    """One-time layout migration for an r14-early state (``fp`` holding
-    a flat staged-swap generation + an atomic ``_last_batch`` mark):
-    move the flat table under ``fp/batch_id=<mark>`` so it becomes the
-    first partition of the append-only layout. Pure renames — O(1) in
-    state size. Crash-resumable: the half-moved table waits under
-    ``fp.v2mig`` and is finished before any read."""
-    fp_dir = f"{state_path}/fp"
-    mig = f"{state_path}/fp.v2mig"
-    if not fs_exists(spark, mig):
-        if not fs_exists(spark, fp_dir):
-            return
-        if any(
-            n.startswith("batch_id=") for n in fs_ls(spark, fp_dir)
+def _migrate_flat(
+    spark: SparkSession,
+    part_dir: str,
+    waypoint: str,
+    first_id: Callable[[], int | None],
+) -> None:
+    """One-time migration of a state written by the old staged swap:
+    the flat table at ``part_dir`` moves under
+    ``part_dir/batch_id=<first_id()>``, the first partition of the
+    append-only layout. Pure renames — O(1) in state size.
+    Crash-resumable: the half-moved table waits at ``waypoint`` and is
+    finished before any read. A v2 fingerprint state always carried
+    its mark, so a missing one (``first_id()`` None) is refused."""
+    if not fs_exists(spark, waypoint):
+        if not fs_exists(spark, part_dir) or any(
+            n.startswith("batch_id=") for n in fs_ls(spark, part_dir)
         ):
-            return  # already the append layout
-        _must_rename(spark, fp_dir, mig)
-    mark = fs_read_text(spark, f"{state_path}/_last_batch")
-    if mark is None:
+            return  # nothing to migrate, or already the append layout
+        must_rename(spark, part_dir, waypoint)
+    first = first_id()
+    if first is None:
         raise IOError(
-            f"dedup state migration: {mig} exists but "
-            f"{state_path}/_last_batch is missing — the v2 layout "
-            "always carried the mark. Restore the mark file (or "
-            f"rename {mig} back to {fp_dir}) before restarting."
+            f"state migration: {waypoint} waits to move under "
+            f"{part_dir}, but the state's {MARK} is missing or "
+            f"unreadable. Restore it (or rename {waypoint} back to "
+            f"{part_dir}) before restarting."
         )
-    fs_mkdirs(spark, fp_dir)
-    _must_rename(spark, mig, f"{fp_dir}/batch_id={int(mark)}")
+    fs_mkdirs(spark, part_dir)
+    must_rename(spark, waypoint, f"{part_dir}/batch_id={first}")
 
 
 def read_dedup_state(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -196,9 +142,7 @@ def read_dedup_state(spark: SparkSession, output_dir: str) -> DataFrame:
     append-only ``fingerprints/fp/batch_id=N`` partitions, recovered
     and migrated first so readers never see a half-committed layout."""
     state_path = f"{output_dir}/fingerprints"
-    recover_staged(spark, state_path)
-    _recover_fp_compaction(spark, state_path)
-    _migrate_v2_state(spark, state_path)
+    _open_fp_state(spark, state_path)
     return spark.read.parquet(f"{state_path}/fp").drop("batch_id")
 
 
@@ -210,37 +154,18 @@ def compact_dedup_state(spark: SparkSession, output_dir: str) -> int:
     micro-batch — correct forever, but at high trigger counts the
     partition listing and small files add up; run this occasionally
     (correctness never depends on it — the direct analogue of
-    ``rollup.merge_partials`` compaction guidance).
-
-    Crash-safe: the combined table is staged beside the state as
-    ``fp_compact_tmp_<mark>`` (written fully before anything is
-    deleted), then source partitions are dropped and the staged table
-    renamed in. A crash anywhere in the commit is finished by
-    ``_recover_fp_compaction`` before the next fold or read. Must not
-    run concurrently with a fold."""
+    ``rollup.merge_partials`` compaction guidance). Crash-safe
+    (``commit.merge_partitions``); must not run concurrently with a
+    fold."""
     state_path = f"{output_dir}/fingerprints"
-    recover_staged(spark, state_path)
-    _recover_fp_compaction(spark, state_path)
-    _migrate_v2_state(spark, state_path)
     fp_dir = f"{state_path}/fp"
-    mark = _state_mark(spark, state_path)
+    _open_fp_state(spark, state_path)
+    mark = read_mark(spark, state_path, parts=fp_dir)
     if mark is None:
         return 0
-    parts = [b for b in _committed_batches(spark, fp_dir) if b <= mark]
-    if len(parts) <= 1:
-        return len(parts)
-    tmp = f"{state_path}/fp_compact_tmp_{mark}"
-    (
-        spark.read.parquet(fp_dir)
-        .filter(F.col("batch_id") <= mark)
-        .drop("batch_id")
-        .write.mode("overwrite")
-        .parquet(tmp)
+    return merge_partitions(
+        spark, fp_dir, f"{state_path}/fp_compact_tmp_", mark
     )
-    for b in parts:
-        fs_delete(spark, f"{fp_dir}/batch_id={b}")
-    _must_rename(spark, tmp, f"{fp_dir}/batch_id={mark}")
-    return len(parts)
 
 
 def dedup_documents_batch(
@@ -253,28 +178,20 @@ def dedup_documents_batch(
     plain function (the ``foreachBatch`` sink calls it) so replay
     semantics are directly testable without driving a stream.
 
-    The state is APPEND-ONLY since late r14: each fold writes only its
-    batch's fresh fingerprints to ``fingerprints/fp/batch_id=N``
-    (``incremental_exact_dedup(delta=True)``) instead of rewriting the
-    whole union through a staged swap. That swap made every fold's
-    state write O(state) — at 100 TB the fingerprint table is
-    |distinct texts| rows, and rewriting it per micro-batch is the
-    write-side analogue of the state-sized replay scan r14 already
-    removed; the delta write is O(batch), always.
-
-    What the atomic swap used to guarantee, the high-water mark plus
-    partition pruning now guarantees without it:
+    The state is APPEND-ONLY (module docstring): each fold writes only
+    its batch's fresh fingerprints to ``fingerprints/fp/batch_id=N``
+    (``incremental_exact_dedup(delta=True)``), an O(batch) write. The
+    batch mark (``sources.commit``) plus partition pruning keep the
+    fold replay-safe:
 
     * prior state is ALWAYS read as ``batch_id <= mark`` (partition
       pruning, not a filter scan), so a partition written by a crashed
       fold — present but ahead of the mark — is invisible until its
       batch replays and overwrites it;
     * replay detection is the O(1) ``mark >= batch_id`` comparison
-      (plus the admitted-output existence check), exactly as before;
-    * the mark file's own write is a plain overwrite, NOT atomic — a
-      torn mark falls back to the authoritative max-committed-partition
-      scan (``_SUCCESS`` job markers, which ARE atomic), see
-      :func:`_state_mark`.
+      (plus the admitted-output existence check);
+    * a missing or unreadable mark falls back to the highest committed
+      partition (``_SUCCESS`` job markers, which are atomic).
 
     Crash windows, end to end: before the admitted write — replay
     recomputes identically; between admitted and state-partition
@@ -283,14 +200,13 @@ def dedup_documents_batch(
     ``_SUCCESS``) and above the mark, replay overwrites it; between
     partition write and mark write — replay recomputes against
     ``<= mark`` (its own committed partition excluded by pruning) and
-    overwrites idempotently; mark torn — the ``_SUCCESS`` fallback
-    reads the same value; after the mark — O(1) skip, protecting the
+    overwrites idempotently; after the mark — O(1) skip, protecting the
     admitted output from the empty-recompute clobber the detection
     exists for.
 
     Legacy layouts migrate on first contact: the r14 staged-swap
     layout by pure rename into ``batch_id=<mark>``
-    (:func:`_migrate_v2_state`, O(1)); the pre-r14 flat layout (no
+    (:func:`_migrate_flat`, O(1)); the pre-r14 flat layout (no
     mark at all) via the old state-sized containment check once, after
     which its union is written as the first partition and the mark
     takes over for good."""
@@ -298,20 +214,14 @@ def dedup_documents_batch(
     state_path = f"{output_dir}/fingerprints"
     fp_dir = f"{state_path}/fp"
 
-    # restore any half-committed state first: a mid-swap v2 crash, a
-    # mid-commit compaction, a half-migrated v2 layout
-    recover_staged(spark, state_path)
-    _recover_fp_compaction(spark, state_path)
-    _migrate_v2_state(spark, state_path)
+    _open_fp_state(spark, state_path)
 
     if fs_exists(spark, fp_dir):
-        mark = _state_mark(spark, state_path)
-        if (
-            mark is not None
-            and mark >= batch_id
-            and fs_exists(spark, admitted_path)
+        if fs_exists(spark, admitted_path) and batch_done(
+            spark, state_path, batch_id, parts=fp_dir
         ):
             return  # state already contains this batch: O(1) skip
+        mark = read_mark(spark, state_path, parts=fp_dir)
         prior = (
             spark.read.parquet(fp_dir)
             .filter(F.col("batch_id") <= mark)
@@ -336,11 +246,11 @@ def dedup_documents_batch(
         union.write.mode("overwrite").parquet(
             f"{fp_dir}/batch_id={batch_id}"
         )
-        fs_write_text(spark, f"{state_path}/_last_batch", str(batch_id))
+        write_mark(spark, state_path, batch_id)
         # drop the superseded v1 files (loose parquet at the state
         # root; the fp/ subdir and mark stay)
         for name in fs_ls(spark, state_path):
-            if name not in ("fp", "_last_batch"):
+            if name not in ("fp", MARK):
                 fs_delete(spark, f"{state_path}/{name}")
         return
     else:
@@ -353,7 +263,7 @@ def dedup_documents_batch(
     )
     fresh.write.mode("overwrite").parquet(admitted_path)
     delta.write.mode("overwrite").parquet(f"{fp_dir}/batch_id={batch_id}")
-    fs_write_text(spark, f"{state_path}/_last_batch", str(batch_id))
+    write_mark(spark, state_path, batch_id)
 
 
 def start_streaming_doc_dedup(
@@ -375,10 +285,10 @@ def start_streaming_doc_dedup(
     ONE OUTPUT DIR = ONE CHECKPOINT LINEAGE
     (``compaction.enforce_output_lineage``): this sink is the guard's
     motivating case — besides the batch_id-partition mixing every
-    ``foreachBatch`` sink risks, its ``_last_batch`` high-water mark
-    would make a NEW lineage's early batches (ids restarting at 0,
-    below the old mark) read as already-merged replays and be skipped
-    outright: permanent, unreported document loss."""
+    ``foreachBatch`` sink risks, its high-water mark would make a NEW
+    lineage's early batches (ids restarting at 0, below the old mark)
+    read as already-merged replays and be skipped outright: permanent,
+    unreported document loss."""
     checkpoint = checkpoint_dir or f"{output_dir}/_dedup_checkpoint"
     enforce_output_lineage(
         spark, output_dir, checkpoint, "start_streaming_doc_dedup"
@@ -396,45 +306,18 @@ def start_streaming_doc_dedup(
     return writer.start()
 
 
-def _committed_band_batches(
-    spark: SparkSession, state_path: str
-) -> list[int]:
-    """Committed band-state partition ids (``_SUCCESS`` present) —
-    same authority rule as the fingerprint state's scan."""
-    out = []
-    for name in fs_ls(spark, state_path):
-        if not name.startswith("batch_id="):
-            continue
-        try:
-            b = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if fs_exists(spark, f"{state_path}/batch_id={b}/_SUCCESS"):
-            out.append(b)
-    return sorted(out)
-
-
-def _recover_band_compaction(
-    spark: SparkSession, output_dir: str
-) -> None:
-    """Finish a :func:`compact_band_state` that crashed mid-commit:
-    the staged merge (``band_compact_tmp_<top>``, the union of every
-    partition BELOW top) survives until the commit completes, so
-    recovery deletes any remaining committed partitions < top and
-    renames the staged table into ``batch_id=-1``. Idempotent; runs
-    before every fold."""
+def _open_band_state(spark: SparkSession, output_dir: str) -> None:
+    """Finish what a crash left half done before the band state is
+    read: a mid-swap legacy fold, a mid-commit compaction, a
+    half-migrated legacy layout (whose flat table goes under the
+    reserved ``batch_id=-1``, below every real batch)."""
     state_path = f"{output_dir}/band_state"
-    for name in fs_ls(spark, output_dir):
-        if not name.startswith("band_compact_tmp_"):
-            continue
-        top = int(name.rsplit("_", 1)[1])
-        for b in _committed_band_batches(spark, state_path):
-            if b < top:
-                fs_delete(spark, f"{state_path}/batch_id={b}")
-        fs_mkdirs(spark, state_path)
-        _must_rename(
-            spark, f"{output_dir}/{name}", f"{state_path}/batch_id=-1"
-        )
+    recover_staged(spark, state_path)
+    recover_merge(
+        spark, state_path, f"{output_dir}/band_compact_tmp_",
+        target=-1, below=True,
+    )
+    _migrate_flat(spark, state_path, f"{state_path}.bsmig", lambda: -1)
 
 
 def compact_band_state(spark: SparkSession, output_dir: str) -> int:
@@ -446,32 +329,18 @@ def compact_band_state(spark: SparkSession, output_dir: str) -> int:
     checkpoint-committed, and the lineage guard forbids a second
     lineage), so excluding it means a post-compaction replay
     overwrites its own partition exactly as before and no state row is
-    ever lost or doubled. Same staged commit/recovery shape as
-    :func:`compact_dedup_state`; must not run concurrently with a
-    fold."""
+    ever lost or doubled. Same staged commit/recovery
+    (``commit.merge_partitions``) as :func:`compact_dedup_state`; must
+    not run concurrently with a fold."""
     state_path = f"{output_dir}/band_state"
-    recover_staged(spark, state_path)
-    _recover_band_compaction(spark, output_dir)
-    _migrate_band_state(spark, state_path)
-    parts = _committed_band_batches(spark, state_path)
+    _open_band_state(spark, output_dir)
+    parts = committed_batches(spark, state_path)
     if not parts:
         return 0
-    top = parts[-1]
-    sources = [b for b in parts if b < top]
-    if len(sources) <= 1:
-        return len(sources)
-    tmp = f"{output_dir}/band_compact_tmp_{top}"
-    (
-        spark.read.parquet(state_path)
-        .filter(F.col("batch_id") < top)
-        .drop("batch_id")
-        .write.mode("overwrite")
-        .parquet(tmp)
+    return merge_partitions(
+        spark, state_path, f"{output_dir}/band_compact_tmp_", parts[-1],
+        target=-1, below=True,
     )
-    for b in sources:
-        fs_delete(spark, f"{state_path}/batch_id={b}")
-    _must_rename(spark, tmp, f"{state_path}/batch_id=-1")
-    return len(sources)
 
 
 def read_band_state(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -481,31 +350,8 @@ def read_band_state(spark: SparkSession, output_dir: str) -> DataFrame:
     partitions, recovered and migrated first so readers never see a
     half-committed layout (the read-side twin of
     :func:`read_dedup_state`)."""
-    state_path = f"{output_dir}/band_state"
-    recover_staged(spark, state_path)
-    _recover_band_compaction(spark, output_dir)
-    _migrate_band_state(spark, state_path)
-    return spark.read.parquet(state_path).drop("batch_id")
-
-
-def _migrate_band_state(spark: SparkSession, state_path: str) -> None:
-    """One-time layout migration for a pre-append band state (banded
-    rows flat under the state path, written by the old staged swap):
-    move the flat table under ``batch_id=-1`` — a reserved id below
-    every real batch — so it becomes the first partition of the
-    append-only layout. Pure renames, crash-resumable via the
-    ``.bsmig`` waypoint."""
-    mig = f"{state_path}.bsmig"
-    if not fs_exists(spark, mig):
-        if not fs_exists(spark, state_path):
-            return
-        if any(
-            n.startswith("batch_id=") for n in fs_ls(spark, state_path)
-        ):
-            return  # already the append layout
-        _must_rename(spark, state_path, mig)
-    fs_mkdirs(spark, state_path)
-    _must_rename(spark, mig, f"{state_path}/batch_id=-1")
+    _open_band_state(spark, output_dir)
+    return spark.read.parquet(f"{output_dir}/band_state").drop("batch_id")
 
 
 def near_dedup_documents_batch(
@@ -537,9 +383,7 @@ def near_dedup_documents_batch(
     )
 
     state_path = f"{output_dir}/band_state"
-    recover_staged(spark, state_path)
-    _recover_band_compaction(spark, output_dir)
-    _migrate_band_state(spark, state_path)
+    _open_band_state(spark, output_dir)
     prior = (
         spark.read.parquet(state_path).drop("batch_id")
         if fs_exists(spark, state_path)

@@ -114,7 +114,7 @@ def etl_batch_sink(
     """Fold one landing micro-batch into the cleansed/invalid tables.
     Plain function (the ``foreachBatch`` sink calls it) so replay
     semantics are directly testable without driving a stream — see
-    :func:`start_streaming_etl` for the high-water-mark contract.
+    :func:`start_streaming_etl` for the per-table batch-mark contract.
 
     The micro-batch is persisted once (both outputs derive from it;
     without the persist each write re-parses the batch's CSV files —
@@ -131,22 +131,15 @@ def etl_batch_sink(
 
     from pyspark import StorageLevel, inheritable_thread_target
 
-    from sales_data_warehouse_spark.sources.compaction import (
-        fs_read_text,
-        fs_write_text,
+    from sales_data_warehouse_spark.sources.commit import (
+        batch_done,
+        write_mark,
     )
 
-    def _committed(table: str) -> bool:
-        mark = fs_read_text(spark, f"{output_dir}/{table}/_last_batch")
-        if mark is None:
-            return False
-        try:
-            return int(mark) >= batch_id
-        except ValueError:
-            # torn mark write: re-append (the documented window)
-            return False
-
-    todo = [t for t in ("cleansed", "invalid") if not _committed(t)]
+    todo = [
+        t for t in ("cleansed", "invalid")
+        if not batch_done(spark, f"{output_dir}/{t}", batch_id)
+    ]
     if not todo:
         return
 
@@ -160,11 +153,7 @@ def etl_batch_sink(
             if table == "cleansed":
                 writer = writer.partitionBy("order_date")
             writer.parquet(f"{output_dir}/{table}")
-            # mark AFTER the append commit: a replay that sees it knows
-            # the data landed (docstring covers the torn-mark window)
-            fs_write_text(
-                spark, f"{output_dir}/{table}/_last_batch", str(batch_id)
-            )
+            write_mark(spark, f"{output_dir}/{table}", batch_id)
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             # session form: inherits JVM-local properties AND session
@@ -193,16 +182,13 @@ def start_streaming_etl(
 
     Returns the StreamingQuery (caller owns stop/awaitTermination).
 
-    Replay semantics (r15, closing the r14 double-append window): each
-    table carries a ``_last_batch`` high-water mark (the
-    ``embeddings.ivf_append_batch`` pattern) written AFTER its append
-    commits, so a checkpoint replay — including a crash BETWEEN the
-    two appends — skips the table(s) that already committed instead of
-    re-appending them. The remaining at-least-once window is a crash
-    between ONE table's parquet commit and its mark write, which
-    double-appends that one batch for that one table on replay — the
-    same torn-mark window every marked sink in the package documents
-    and tolerates (a later batch's mark retires it).
+    Replay semantics: each table carries its own batch mark
+    (``sources.commit``), advanced after its append commits, so a
+    checkpoint replay — including one after a crash BETWEEN the two
+    appends — re-appends only the table(s) whose mark does not cover
+    the batch. The one remaining window, a crash between a table's
+    append commit and its mark, appends that batch to that table a
+    second time on replay (at-least-once for one batch).
 
     ONE OUTPUT DIR = ONE CHECKPOINT LINEAGE
     (``compaction.enforce_output_lineage``, r14): ``batch_id`` (and so

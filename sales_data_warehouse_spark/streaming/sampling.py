@@ -7,19 +7,13 @@ prior batches).
 
 Replay semantics are BELT AND SUSPENDERS here: the fold itself is
 replay-idempotent (``weighted_sample_incremental`` dedups per id
-keeping the highest-key copy, so re-folding an already-absorbed batch
-is a no-op by construction), and a per-batch marker directory —
-namespaced by a digest of the checkpoint location, same rationale as
-``streaming.embeddings`` — additionally skips the recompute and the
-reservoir rewrite on a re-delivered batch. Unlike the IVF append sink
-there is no unguarded crash window: a crash between the reservoir swap
-and the marker write merely re-folds a batch whose rows are already in
-the reservoir (a no-op), and a crash INSIDE the swap — between
-``staged_overwrite``'s two renames, which leaves ``rows`` missing and
-``rows.stage_old`` holding the only durable copy — is restored by
-``recover_staged`` at the top of every fold before the state is read
-(treating that state as "first batch" would silently reset the
-reservoir; r11 review).
+keeping the highest-key copy), and a batch mark (``sources.commit``,
+namespaced by checkpoint as in ``streaming.embeddings``) additionally
+skips the recompute and the rewrite on a re-delivered batch — so a
+crash between the reservoir swap and the mark costs one no-op re-fold.
+A crash INSIDE the swap (``rows`` missing, ``rows.stage_old`` holding
+the only copy) is restored by ``recover_staged`` before every fold
+reads the state.
 
 The reservoir state is written with ``staged_overwrite`` (staging dir +
 two renames) because the fold READS the current reservoir while
@@ -37,12 +31,12 @@ from pyspark.sql import DataFrame, SparkSession
 from sales_data_warehouse_spark.operators.sampling import (
     weighted_sample_incremental,
 )
+from sales_data_warehouse_spark.sources.commit import (
+    batch_done,
+    write_mark,
+)
 from sales_data_warehouse_spark.sources.compaction import (
-    fs_delete,
     fs_exists,
-    fs_ls,
-    fs_read_text,
-    fs_write_text,
     recover_staged,
     staged_overwrite,
 )
@@ -64,23 +58,17 @@ def reservoir_fold_batch(
     post-fold row count (≤ k; the count is one scan of a ≤k-row table).
     Plain function (the ``foreachBatch`` sink calls it) so replay
     semantics are directly testable without driving a stream: a batch
-    whose marker exists already folded — skip both the recompute and
-    the rewrite.
+    the mark already covers is skipped — no recompute, no rewrite.
 
     State layout: ``{reservoir_path}/rows`` holds the ≤k-row sample
     (document columns + ``aes_key``);
-    ``{reservoir_path}/_ingest_batches/<namespace>/_last_batch`` is
-    the replay high-water mark (``marker_namespace`` scopes it because
+    ``{reservoir_path}/_ingest_batches/<namespace>`` holds the batch
+    mark (``sources.commit``; ``marker_namespace`` scopes it because
     batch_id is unique only within one checkpoint lineage — see
-    ``streaming.embeddings``). Late r14: the mark file replaced one
-    per-batch marker DIRECTORY per trigger — unbounded tiny-dir
-    accumulation for an O(1) check the single mark answers; safe here
-    precisely because a torn or lost mark merely re-folds, and the
-    fold is id-idempotent. Pre-existing per-batch markers are honored
-    and retired as the mark passes them."""
-    ns = f"{marker_namespace}/" if marker_namespace else ""
-    marker_dir = f"{reservoir_path}/_ingest_batches/{ns}"
-    mark_file = f"{marker_dir}_last_batch"
+    ``streaming.embeddings``)."""
+    mark_dir = f"{reservoir_path}/_ingest_batches"
+    if marker_namespace:
+        mark_dir = f"{mark_dir}/{marker_namespace}"
     rows_path = f"{reservoir_path}/rows"
     # A fold that crashed between staged_overwrite's two renames leaves
     # `rows` missing and `rows.stage_old` holding the pre-crash
@@ -89,16 +77,7 @@ def reservoir_fold_batch(
     # the pre-swap state first; the interrupted batch has no mark yet,
     # so it re-folds idempotently on top of the restored rows.
     recover_staged(spark, rows_path)
-    mark = fs_read_text(spark, mark_file)
-    done = False
-    if mark is not None:
-        try:
-            done = int(mark) >= batch_id
-        except ValueError:
-            pass  # torn mark write: re-fold (idempotent), then rewrite
-    if not done:
-        done = fs_exists(spark, f"{marker_dir}batch_id={batch_id}")
-    if not done:
+    if not batch_done(spark, mark_dir, batch_id, legacy=True):
         prev = (
             spark.read.parquet(rows_path)
             if fs_exists(spark, rows_path)
@@ -108,19 +87,7 @@ def reservoir_fold_batch(
             batch_df, prev, weight_col, k, id_col
         )
         staged_overwrite(spark, folded, rows_path)
-        # mark AFTER the swap: a crash before it re-folds an
-        # already-absorbed batch on replay, which the id-idempotent
-        # fold turns into a no-op (module docstring)
-        fs_write_text(spark, mark_file, str(batch_id))
-        # retire legacy per-batch marker dirs the mark now supersedes
-        for name in fs_ls(spark, marker_dir.rstrip("/")):
-            if name.startswith("batch_id="):
-                try:
-                    b = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if b <= batch_id:
-                    fs_delete(spark, f"{marker_dir}{name}")
+        write_mark(spark, mark_dir, batch_id)
     return spark.read.parquet(rows_path).count()
 
 
